@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Bench harness (driver contract): times every SparkEntry query on
   * SPARK_GRAFT_SF_DIR and prints one JSON line.
   *
@@ -12,9 +10,10 @@ import org.apache.spark.sql.SparkSession
   *
   * SELF-ATTRIBUTING: every `slow` entry carries
   * `[wall_ds, stage_exec_ds, gc_ds, n_jobs, job_wall_ds]` from the
-  * median-wall run (a SparkListener sums task executorRunTime / jvmGCTime
-  * over completed stages, counts job submissions, and accumulates
-  * inside-job wall time between per-run snapshots). Three consecutive
+  * median-wall run ([[Harness.MetricsListener]] sums task executorRunTime /
+  * jvmGCTime over completed stages, counts job submissions, and measures
+  * inside-job wall time as the union of the run's job intervals, so
+  * overlapping AQE/subquery jobs count once). Three consecutive
   * rounds burned their top adjudication item bisecting driver-window
   * bursts because the artifact recorded wall only. Reading the tuple:
   * wall ≈ job_wall with exec comparable → genuinely priced distributed
@@ -26,75 +25,11 @@ import org.apache.spark.sql.SparkSession
   */
 object Bench {
 
-  /** Cumulative task/job counters; per-run deltas attribute each query. */
-  private final class MetricsListener
-      extends org.apache.spark.scheduler.SparkListener {
-    val execMs = new java.util.concurrent.atomic.AtomicLong
-    val gcMs = new java.util.concurrent.atomic.AtomicLong
-    val jobs = new java.util.concurrent.atomic.AtomicLong
-    val jobWallMs = new java.util.concurrent.atomic.AtomicLong
-    private val jobStart = new java.util.concurrent.ConcurrentHashMap[
-      Integer, java.lang.Long]
-    override def onStageCompleted(
-        e: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit = {
-      val m = e.stageInfo.taskMetrics
-      if (m != null) {
-        execMs.addAndGet(m.executorRunTime)
-        gcMs.addAndGet(m.jvmGCTime)
-        ()
-      }
-    }
-    override def onJobStart(
-        e: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-      jobs.incrementAndGet()
-      jobStart.put(e.jobId, e.time)
-      ()
-    }
-    override def onJobEnd(
-        e: org.apache.spark.scheduler.SparkListenerJobEnd): Unit = {
-      val s = jobStart.remove(e.jobId)
-      // summed per job from the events' own timestamps; the bench runs
-      // queries serially so overlap (which would double-count) is rare
-      // and the value is an attribution signal, not an invariant
-      if (s != null) { jobWallMs.addAndGet(e.time - s); () }
-    }
-    def snapshot: (Long, Long, Long, Long) =
-      (execMs.get, gcMs.get, jobs.get, jobWallMs.get)
-  }
-
-  /** Flush the async listener bus so a snapshot sees every event of the
-    * run that just finished. `listenerBus`/`waitUntilEmpty` are
-    * private[spark] in source but public in bytecode — reflection keeps
-    * this harness on the unmanaged-jar classpath without forking a
-    * package. Best-effort: telemetry beats nothing, a timeout must not
-    * fail the bench.
-    */
-  private def drainListenerBus(spark: SparkSession): Unit =
-    try {
-      val sc = spark.sparkContext
-      val bus = sc.getClass.getMethod("listenerBus").invoke(sc)
-      bus.getClass.getMethod("waitUntilEmpty", classOf[Long])
-        .invoke(bus, java.lang.Long.valueOf(10000L))
-      ()
-    } catch { case _: Throwable => () }
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // events.parquet is TIMESTAMP(NANOS); session-wide (see Tables.events)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    // ERROR, not WARN: the driver keeps only the LAST 2000 chars of output,
-    // and per-query cleanup (unpersisting localCheckpoint blocks) emits a
-    // WARN per block — the r9 capture shows that noise sharing the tail
-    // window with the JSON line. Nothing may print after the line.
-    spark.sparkContext.setLogLevel("ERROR")
-    val metrics = new MetricsListener
-    spark.sparkContext.addSparkListener(metrics)
+    val cpus = Harness.cpus
+    val spark = Harness.session()
+    val metrics = Harness.listen(spark)
 
     val warmDir = "/root/testdata/sf0.001"
     if (new java.io.File(warmDir).isDirectory) {
@@ -133,39 +68,22 @@ object Bench {
     // per-run tuple: the run with the MEDIAN wall supplies the telemetry
     // so the reported exec/gc/jobs are the ones that produced the
     // reported wall, not a cross-run blend
-    case class Run(wall: Double, execMs: Long, gcMs: Long, jobs: Long,
-                   jobWallMs: Long)
     val results = selected.toSeq.sortBy(_._1).map { case (name, fn) =>
-      val runs = scala.collection.mutable.ArrayBuffer[Run]()
+      val runs = scala.collection.mutable.ArrayBuffer[Harness.Run]()
       var ok = true
-      var r = 0
-      while (ok && r < Runs) {
-        drainListenerBus(spark)
-        val (e0, g0, j0, w0) = metrics.snapshot
-        val t0 = System.nanoTime()
-        try { fn(spark, sfDir).write.format("noop").mode("overwrite").save() }
-        catch {
-          case t: Throwable =>
-            System.err.println(s"BENCH FAILURE $name: ${t.getClass.getName}: ${t.getMessage}")
-            ok = false
+      while (ok && runs.size < Runs) {
+        runs += metrics.measure(spark) {
+          try { fn(spark, sfDir).write.format("noop").mode("overwrite").save() }
+          catch {
+            case t: Throwable =>
+              System.err.println(s"BENCH FAILURE $name: ${t.getClass.getName}: ${t.getMessage}")
+              ok = false
+          }
+          finally Harness.release(spark)
         }
-        finally {
-          // release per-query persists AND any localCheckpoint blocks —
-          // clearCache only covers CacheManager entries, while checkpoint
-          // blocks (e.g. the dedup fixpoint's final round) are raw RDD
-          // persists that would otherwise accumulate across queries
-          spark.catalog.clearCache()
-          spark.sparkContext.getPersistentRDDs.values
-            .foreach(_.unpersist(blocking = false))
-        }
-        val wall = (System.nanoTime() - t0) / 1e9
-        drainListenerBus(spark)
-        val (e1, g1, j1, w1) = metrics.snapshot
-        runs += Run(wall, e1 - e0, g1 - g0, j1 - j0, w1 - w0)
-        r += 1
       }
       val median = if (ok) runs.sortBy(_.wall).apply(Runs / 2)
-        else Run(-1.0, 0, 0, 0, 0)
+        else Harness.Run(-1.0, 0, 0, 0, 0, 0)
       (name, median, ok)
     }
     // failed queries report -1 and are excluded from the total, so a broken
@@ -247,14 +165,14 @@ object Bench {
     try {
       val pq = results.sortBy(_._1).map { case (k, v, ok) =>
         val vals = if (ok)
-          s"[${num(v.wall)},${v.execMs / 100},${v.gcMs / 100},${v.jobs},${v.jobWallMs / 100}]"
-        else "[-1,0,0,0,0]"
+          s"[${num(v.wall)},${v.execMs / 100},${v.gcMs / 100},${v.jobs},${v.jobWallMs / 100},${v.stages}]"
+        else "[-1,0,0,0,0,0]"
         "\"" + k + "\":" + vals
       }.mkString("{", ",", "}")
       val out = sys.env.getOrElse("SPARK_GRAFT_PERQUERY_OUT", "bench_perquery.json")
       val w = new java.io.PrintWriter(out, "UTF-8")
       try w.println(
-        f"""{"total":$total%.2f,"unit":"sec","qunit":"ds","cpus":"$cpus","sf":"$sfName","cols":["wall_ds","stage_exec_ds","gc_ds","n_jobs","job_wall_ds"],"queries":$pq}""")
+        f"""{"total":$total%.2f,"unit":"sec","qunit":"ds","cpus":"$cpus","sf":"$sfName","cols":["wall_ds","stage_exec_ds","gc_ds","n_jobs","job_wall_ds","n_stages"],"queries":$pq}""")
       finally w.close()
     } catch { case _: Throwable => () }
     var keep = slowEntries

@@ -47,11 +47,7 @@ object Verify {
             .coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name")
         } catch { case _: Throwable => () }
       } finally {
-        // per-query persists + localCheckpoint blocks (the latter are raw
-        // RDD persists the CacheManager doesn't know about)
-        spark.catalog.clearCache()
-        spark.sparkContext.getPersistentRDDs.values
-          .foreach(_.unpersist(blocking = false))
+        Harness.release(spark)
         System.err.println(f"[verify] done $name in ${(System.nanoTime() - t0) / 1e9}%.1fs")
       }
     }
@@ -87,20 +83,10 @@ object Verify {
     // optional trailing args: dump only these queries (fast local loop);
     // unknown names fail loudly rather than silently verifying nothing
     val only = args.drop(2).toSet
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // micros (not INT96) so the driver's parquet readers see the same
-      // timestamp physical type DuckDB produces for the oracle results
-      .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-      // legacy events.parquet vintages are TIMESTAMP(NANOS); session-wide
-      // (see Tables.loadEventsRaw — harmless for the micros layout)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session()
+    // micros (not INT96) so parquet readers of the dump see the same
+    // timestamp physical type DuckDB produces for the oracle results
+    spark.conf.set("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
     run(spark, sfDir, outDir, only)
     // exit 0 even when queries failed — DELIBERATE: the driver must still
     // run the DuckDB compare over the dump, where the per-name sentinel

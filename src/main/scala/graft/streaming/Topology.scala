@@ -108,9 +108,6 @@ object Topology {
         Stats.funnelStreamingTtl(spark, events, ttl))
   }
 
-  /** Start one store as an in-memory Update-mode sink (smoke/test harness);
-    * production would swap format("memory") for the real sink per store.
-    */
   /** Output mode for a store: session-window aggregations only support
     * Append (sessions emit once, when the watermark closes them). A
     * WATERMARKED time-window aggregation FOLLOWED BY A ROW GENERATOR
@@ -179,6 +176,11 @@ object Topology {
     else OutputMode.Append()
   }
 
+  /** Start one store as an in-memory sink (smoke/test harness) in the
+    * output mode [[outputModeFor]] picks for it, which is Append for some
+    * stores; production would swap format("memory") for the real sink per
+    * store.
+    */
   def startMemorySink(df: DataFrame, name: String,
                       trigger: Trigger = Trigger.ProcessingTime("10 seconds")): StreamingQuery = {
     val mode = outputModeFor(df)

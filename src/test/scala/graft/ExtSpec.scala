@@ -1096,13 +1096,14 @@ class ExtSpec extends SparkSpec {
   }
 
   test("autoSignBits reproduces the measured sizing ladder; auto-sized 100x keeps sum-bucket-sq linear") {
-    // the ScaleProbe construction: dim-rotated copies so each copy's sign
-    // pattern differs (scaling by a constant would replicate the base
+    // the lsh_sizing probe construction: dim-rotated copies so each copy's
+    // sign pattern differs (scaling by a constant would replicate the base
     // bucket distribution). 4x the sf0.001 corpus = 2 000 vectors — the
     // exact 1x population of SCALE.md's measured ladder (8 → 11 → 15 bits
     // at 1x/10x/100x)
     val base = Tables.embeddings(spark, sfDir).select("vec_id", "embedding")
-    def scaled(times: Int) = graft.ProbeUtil.rotatedCopies(base, times)
+    def scaled(times: Int) =
+      Harness.copies(base, Seq("vec_id"), times)(Probe.rotateDims)
     def sumSq(df: org.apache.spark.sql.DataFrame, bits: Int): Long =
       df.groupBy(Similarity.signBucket(col("embedding"), bits).as("bucket"))
         .agg(count(lit(1)).as("c"))

@@ -234,4 +234,38 @@ class SurfaceSpec extends SparkSpec {
       .select("n_events").as[Long].collect().toSeq
     assert(rows == Seq(1L, 2L, 1L)) // changelog: 1-event, extended, reset
   }
+
+  test("job wall is the union of job intervals: overlaps count once") {
+    // [0,10] and [4,12] overlap (an AQE broadcast job inside its parent);
+    // [20,25] is disjoint. Summed durations would read 10 + 8 + 5 = 23.
+    assert(Harness.unionMs(Seq((20L, 25L), (0L, 10L), (4L, 12L))) == 17L)
+    assert(Harness.unionMs(Seq.empty) == 0L)
+  }
+
+  test("scaled copies: ids disjoint per copy; an over-ceiling request fails loudly") {
+    val base = Tables.documents(spark, sfDir).select("doc_id", "text")
+    val n = base.count()
+    val copies = Harness.copies(base, Seq("doc_id"), 3)((df, _) => df)
+    assert(copies.select("doc_id").distinct().count() == 3 * n)
+    val stride = Harness.idStride(base, "doc_id")
+    val e = intercept[IllegalArgumentException] {
+      Harness.copies(base, Seq("doc_id"), 3, ceiling = 3 * stride - 1)((df, _) => df)
+    }
+    assert(e.getMessage.contains("ceiling"))
+  }
+
+  test("docs cite only graft.Probe entries that exist, and no deleted main") {
+    val docs = Seq("SCALE.md", "README.md").map { f =>
+      f -> new String(java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(f)), "UTF-8")
+    }
+    val cited = docs.flatMap { case (f, text) =>
+      """graft\.Probe\s+([a-z0-9_]+)""".r.findAllMatchIn(text).map(m => f -> m.group(1))
+    }
+    assert(cited.nonEmpty, "no graft.Probe command cited")
+    val unknown = cited.filterNot(c => Probe.entries.contains(c._2))
+    assert(unknown.isEmpty, s"cited entries missing from Probe.entries: $unknown")
+    val deleted = """graft\.\w+Probe\b|graft\.Explain\b|graft\.streaming\.StreamSmoke\b""".r
+    val stale = docs.flatMap { case (f, text) => deleted.findAllIn(text).map(f -> _) }
+    assert(stale.isEmpty, s"docs cite deleted mains: ${stale.distinct}")
+  }
 }
